@@ -2,8 +2,11 @@ package graft
 
 import graft.catalog.FileCatalog
 import graft.ops._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** The user-facing surface of the engine: one entry point per reference
   * blueprint (upload / download / move / delete — SURVEY.md §3), with the
@@ -15,6 +18,17 @@ import org.apache.spark.sql.functions._
   * matching method; `file://`, `hdfs://`, `abfss://`, `s3a://` URIs all
   * work (Hadoop FileSystem API).
   *
+  * A call lists its source once, like the reference's one loop over one
+  * listing: the matched paths are local-checkpointed and counted in one
+  * job, and that snapshot, taken before any side effect, is all the call
+  * plans and acts on. The driver sizes the rest from the count:
+  *  - zero matches plan nothing and act on nothing;
+  *  - move's single-match rule is decided from it, and matches are
+  *    ranked only when an explicit destination name carries the number;
+  *  - a manifest has min(matches, defaultParallelism) partitions when
+  *    numbered (at most that many otherwise), whatever
+  *    `spark.sql.shuffle.partitions` is.
+  *
   * Differences from the reference, all deliberate (SURVEY.md §2):
   *  - transfers run cluster-parallel, not one-file-per-HTTPS-round-trip;
   *  - match numbering is by path order (deterministic), not listing order;
@@ -22,7 +36,9 @@ import org.apache.spark.sql.functions._
   */
 object Blueprints {
 
-  /** What a run did: the manifest that WOULD be/was executed. */
+  /** What a run did: the number of matches and the manifest that WOULD
+    * be/was executed. The manifest reads the call's snapshot, not the
+    * store, so executing it later acts on exactly `matched` files. */
   final case class Report(matched: Long, manifest: DataFrame)
 
   /** upload_file.py:196-237 — local folder -> container. Zero matches do
@@ -86,18 +102,54 @@ object Blueprints {
       sourceFileName: MatchType,
       execute: Boolean = true): Report = {
     val folder = functions.PathAlg.cleanFolderName(sourceFolderName)
-    val catalog = scanAndMatch(spark, containerUri, folder, sourceFileName)
-    val manifest = catalog.select(col("path"))
-    val n = manifest.count()
-    if (n == 0) sourceFileName match {
-      case RegexMatch(p) => throw BlueprintError.NoMatchesFound(p)
-      case ExactMatch(p) => throw BlueprintError.NoMatchesFound(p)
+    val snap = snapshot(spark, containerUri, folder, sourceFileName)
+    if (snap.n == 0) {
+      snap.release()
+      sourceFileName match {
+        case RegexMatch(p) => throw BlueprintError.NoMatchesFound(p)
+        case ExactMatch(p) => throw BlueprintError.NoMatchesFound(p)
+      }
     }
+    val manifest = snap.sized
     if (execute) Transfer.deleteFiles(manifest)
-    Report(n, manifest)
+    Report(snap.n, manifest)
   }
 
   // ---- shared lifecycle (SURVEY.md §3.4) ----
+
+  /** One call's matched paths, listed once and held as a local
+    * checkpoint: counting, planning and the action all read these paths,
+    * so a file created or removed during the call changes nothing. */
+  private final case class Snapshot(paths: RDD[String], frame: DataFrame,
+      n: Long) {
+    /** One partition per match, at most one per task slot. */
+    val parts: Int = math.max(1L, math.min(n,
+      frame.sparkSession.sparkContext.defaultParallelism.toLong)).toInt
+
+    /** The snapshot itself, in at most [[parts]] partitions. */
+    def sized: DataFrame = frame.coalesce(parts)
+
+    /** Drops the checkpointed blocks; nothing may read [[frame]] after. */
+    def release(): Unit = paths.unpersist(blocking = false)
+  }
+
+  /** Lists and matches once, materializing and counting in one job. The
+    * manifests need only the path, and an unnumbered one reads the
+    * snapshot for as long as its Report lives, so the paths are held
+    * serialized: about half the memory of row objects. */
+  private def snapshot(
+      spark: SparkSession, rootUri: String, folder: String,
+      matchType: MatchType): Snapshot = {
+    val paths = scanAndMatch(spark, rootUri, folder, matchType)
+      .select(col("path")).as(Encoders.STRING).rdd
+      .persist(StorageLevel.MEMORY_AND_DISK_SER).localCheckpoint()
+    val n = paths.count()
+    Snapshot(paths, spark.createDataset(paths)(Encoders.STRING).toDF("path"),
+      n)
+  }
+
+  private val manifestSchema = StructType(Seq(
+    StructField("src_path", StringType), StructField("dest_path", StringType)))
 
   private def scanAndMatch(
       spark: SparkSession, rootUri: String, folder: String,
@@ -122,20 +174,35 @@ object Blueprints {
       execute: Boolean,
       action: DataFrame => Unit): Report = {
     val folder = functions.PathAlg.cleanFolderName(sourceFolderName)
-    val catalog = scanAndMatch(spark, sourceRoot, folder, matchType)
-    val effectiveNumbering = matchType match {
-      case _: ExactMatch => RenamePlan.Numbering.Never
+    val snap = snapshot(spark, sourceRoot, folder, matchType)
+    if (snap.n == 0) {
+      snap.release()
+      return Report(0, spark.createDataFrame(
+        java.util.Collections.emptyList[Row](), manifestSchema))
+    }
+    val effectiveNumbering = (matchType, numbering) match {
+      case (_: ExactMatch, _) => RenamePlan.Numbering.Never
+      // only an explicit destination name carries the number
+      // (upload_file.py:94-102), so without one there is nothing to rank
+      case _ if !destFileName.exists(_.nonEmpty) => RenamePlan.Numbering.Never
+      // move_file.py:135, decided from the snapshot's count
+      case (_, RenamePlan.Numbering.UnlessSingle) =>
+        if (snap.n == 1) RenamePlan.Numbering.Never
+        else RenamePlan.Numbering.Always
       case _ => numbering
     }
-    val planned = RenamePlan.planify(catalog,
+    val numbered = effectiveNumbering != RenamePlan.Numbering.Never
+    val planned = RenamePlan.planify(
+      if (numbered) snap.frame else snap.sized,
       destFolder = destFolderName, destName = destFileName,
-      numbering = effectiveNumbering)
+      numbering = effectiveNumbering, numParts = snap.parts)
+    // the numbered plan reads ZipIndex's own checkpoint, not the snapshot
+    if (numbered) snap.release()
     val root = if (destRoot.endsWith("/")) destRoot else destRoot + "/"
     val manifest = planned.select(
       col("path").as("src_path"),
       concat(lit(root), col("dest_path")).as("dest_path"))
-    val n = manifest.count()
     if (execute) action(manifest)
-    Report(n, manifest)
+    Report(snap.n, manifest)
   }
 }

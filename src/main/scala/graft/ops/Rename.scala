@@ -26,8 +26,12 @@ import org.apache.spark.sql.functions._
   * Scale note: the global ordinal is a total order, but it is NOT computed
   * with a single-partition window — [[ZipIndex.withOrdinal]] range-partitions
   * on the sort key and adds per-partition offsets, so enumeration of a
-  * 100M-file manifest stays parallel. The `UnlessSingle` total count is a
-  * scalar aggregate broadcast back (no `count() OVER ()` global window).
+  * 100M-file manifest stays parallel. `numParts` sets that partition count;
+  * [[graft.Blueprints]] passes min(matches, defaultParallelism) from its
+  * snapshot's count and settles `UnlessSingle` from the same count on the
+  * driver, so it never plans that branch. Here `UnlessSingle` counts the
+  * catalog with a scalar aggregate broadcast back (no `count() OVER ()`
+  * global window), which re-reads the catalog on every action.
   */
 object RenamePlan {
 
@@ -43,23 +47,26 @@ object RenamePlan {
     * @param catalog   must contain `pathCol` (source full path / name)
     * @param destFolder raw destination folder (cleaned here, X1)
     * @param destName   optional explicit destination file name
+    * @param numParts   range partitions of the numbered output; 0 keeps
+    *                   [[ZipIndex.withOrdinal]]'s default
     */
   def planify(
       catalog: DataFrame,
       destFolder: String,
       destName: Option[String],
       numbering: Numbering,
-      pathCol: String = "path"): DataFrame = {
+      pathCol: String = "path",
+      numParts: Int = 0): DataFrame = {
     val p = col(pathCol)
     val numbered = numbering match {
       case Numbering.Never =>
         catalog.withColumn("file_number", lit(null).cast("int"))
       case Numbering.Always =>
-        ZipIndex.withOrdinal(catalog, "file_number", Seq(p))
+        ZipIndex.withOrdinal(catalog, "file_number", Seq(p), numParts)
           .withColumn("file_number", col("file_number").cast("int"))
       case Numbering.UnlessSingle =>
         val total = catalog.agg(count(lit(1)).as("__total"))
-        ZipIndex.withOrdinal(catalog, "__ord", Seq(p))
+        ZipIndex.withOrdinal(catalog, "__ord", Seq(p), numParts)
           .crossJoin(broadcast(total))
           .withColumn("file_number",
             when(col("__total") === 1, lit(null).cast("int"))
