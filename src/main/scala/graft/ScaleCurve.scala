@@ -1,5 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import scala.util.{Failure, Success}
 
 /** Scaling-curve harness: times the heaviest queries at three scale
   * factors and fits per-query growth exponents — the empirical leg
@@ -108,18 +110,10 @@ object ScaleCurve {
     "pipeline_budget_select" -> "documents",
     "pipeline_loader_plan" -> "documents")
 
-  /** Curve-only PROBES — measured and fitted like Targets but backed
-    * by local fns instead of graded SparkEntry queries, for scale
-    * datapoints too expensive for the per-round Verify/Bench loops.
-    * probe_bpe_train32k: the full trainLocal loop at 32768 merges
-    * over the 384-bucket salted surface (the merge-forest exhaustion
-    * bound scales ~linearly in buckets; 96 tops out ~11k) — the
-    * SCALE.md §14 claim that trainer cost is per-merge flat, measured
-    * 4x past the graded 8192-merge datapoint. */
   /** k salted copies of the src0 shard for the suffix-array capacity
-    * probes — ONE builder shared by `probe_suffix_chars` and
-    * [[DevSaProbe]] (r16 ADVICE: two verbatim copies could silently
-    * drift and make manual datapoints incomparable with the curve's).
+    * probe [[suffixChars]], which `probe_suffix_chars` and `Dev probe sa`
+    * both run (r16 ADVICE: two verbatim copies could silently drift and
+    * make manual datapoints incomparable with the curve's).
     *
     * The per-copy salt is a token SUFFIX ("tok_c"), which de-dups
     * every 20-char window that touches a token boundary or a salt; a
@@ -153,76 +147,76 @@ object ScaleCurve {
           .as("text"))
   }
 
+  /** The 384-bucket salted vocabulary the tokenizer probes train on. */
+  private[graft] def saltedWords(s: SparkSession, dir: String): DataFrame =
+    graft.queries.BpeQueries.saltedCorpus(s, dir, buckets = 384)._1
+
+  /** (learned, vocab_rows) for a tokenizer trained over `words`; `train`
+    * returns how many merges or pieces it learned. WordPiece and
+    * unigram-LM get depth curves on the BPE probes' salted surface (the
+    * r14 verdict's ask #6). */
+  private[graft] def tokenizerProbe(words: DataFrame)(train: DataFrame => Int)
+      : DataFrame = {
+    import words.sparkSession.implicits._
+    Seq((train(words).toLong, words.count())).toDF("learned", "vocab_rows")
+  }
+
+  /** WordPiece merges learned at `depth`. */
+  private[graft] def wordPiece(depth: Int)(words: DataFrame): Int =
+    graft.ext.WordPiece.trainLocal(words, numMerges = depth).merges.size
+
+  /** Unigram-LM pieces kept from a `seed`-piece seed, two EM rounds. */
+  private[graft] def unigram(seed: Int)(words: DataFrame): Int =
+    graft.ext.Unigram.trainLocal(words, maxPieceLen = 4, seedSize = seed,
+      emRounds = 2).size
+
+  /** The suffix array past fixture scale (the r15 verdict's ask #5): the
+    * positions() table is one row per character, the one deliberately
+    * per-char operator in the suite, so `duplicatedSpans` (>= 20 chars)
+    * runs over `copies` salted copies of the src0 shard
+    * ([[saltedSaCorpus]]): (spans, chars). */
+  private[graft] def suffixChars(s: SparkSession, dir: String, copies: Int)
+      : DataFrame = {
+    import org.apache.spark.sql.functions._
+    import s.implicits._
+    val rep = saltedSaCorpus(s, dir, copies)
+    val chars = rep.agg(sum(length(col("text")))).head().getLong(0)
+    val spans = graft.ext.SuffixArray.duplicatedSpans(rep,
+      "doc_id", "text", minLen = 20)
+    val n = spans.count()
+    spans.unpersist()
+    Seq((n, chars)).toDF("spans", "chars")
+  }
+
+  /** Curve-only PROBES — measured and fitted like Targets but backed
+    * by local fns instead of graded SparkEntry queries, for scale
+    * datapoints too expensive for the per-round Verify/Bench loops.
+    * probe_bpe_train32k: the full trainLocal loop at 32768 merges
+    * over the 384-bucket salted surface (the merge-forest exhaustion
+    * bound scales ~linearly in buckets; 96 tops out ~11k) — the
+    * SCALE.md §14 claim that trainer cost is per-merge flat, measured
+    * 4x past the graded 8192-merge datapoint. */
   val ProbeTargets: Seq[(String, String,
-      (SparkSession, String) => org.apache.spark.sql.DataFrame)] = Seq(
-    ("probe_bpe_train32k", "documents", (s, dir) => {
-      import s.implicits._
-      val (words, _) =
-        graft.queries.BpeQueries.saltedCorpus(s, dir, buckets = 384)
-      val big = graft.ext.Bpe.trainLocal(words, 32768)
-      Seq((big.size.toLong, words.count()))
-        .toDF("merges_learned", "vocab_rows")
-    }),
-    // the r14 verdict's ask #6: measured depth curves for the OTHER
-    // two tokenizer families at production-ish vocab, same salted
-    // surface as the BPE probes
-    ("probe_wordpiece_train8k", "documents", (s, dir) => {
-      import s.implicits._
-      val (words, _) =
-        graft.queries.BpeQueries.saltedCorpus(s, dir, buckets = 384)
-      val t = graft.ext.WordPiece.trainLocal(words, numMerges = 8192)
-      Seq((t.merges.size.toLong, words.count()))
-        .toDF("merges_learned", "vocab_rows")
-    }),
-    ("probe_unigram_seed8k", "documents", (s, dir) => {
-      import s.implicits._
-      val (words, _) =
-        graft.queries.BpeQueries.saltedCorpus(s, dir, buckets = 384)
-      val pieces = graft.ext.Unigram.trainLocal(words,
-        maxPieceLen = 4, seedSize = 8192, emRounds = 2)
-      Seq((pieces.size.toLong, words.count()))
-        .toDF("pieces_learned", "vocab_rows")
-    }),
-    // the r15 verdict's ask #5: the suffix array measured at ~16× the
-    // character volume the graded dedup_suffix_spans processes — the
-    // positions() table is one row per character, the one deliberately
-    // per-char operator in the suite, so its capacity claim gets a
-    // datapoint past fixture scale. 16 salted copies of the src0
-    // shard; the per-copy token salt keeps long repeats WITHIN a copy
-    // (two copies disagree on every token suffix), so duplicated-span
-    // volume scales linearly with copies instead of quadratically
-    // across them.
-    ("probe_suffix_chars", "documents", (s, dir) => {
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val rep = saltedSaCorpus(s, dir, k = 16)
-      val chars = rep.agg(sum(length(col("text")))).head().getLong(0)
-      val spans = graft.ext.SuffixArray.duplicatedSpans(rep,
-        "doc_id", "text", minLen = 20)
-      val n = spans.count()
-      spans.unpersist()
-      Seq((n, chars)).toDF("spans", "chars")
-    }))
+      (SparkSession, String) => DataFrame)] = Seq(
+    ("probe_bpe_train32k", "documents", (s, dir) =>
+      tokenizerProbe(saltedWords(s, dir))(
+        graft.ext.Bpe.trainLocal(_, 32768).size)),
+    ("probe_wordpiece_train8k", "documents",
+      (s, dir) => tokenizerProbe(saltedWords(s, dir))(wordPiece(8192))),
+    ("probe_unigram_seed8k", "documents",
+      (s, dir) => tokenizerProbe(saltedWords(s, dir))(unigram(8192))),
+    // ~16x the characters the graded dedup_suffix_spans processes
+    ("probe_suffix_chars", "documents",
+      (s, dir) => suffixChars(s, dir, copies = 16)))
 
   def main(args: Array[String]): Unit = {
     val sfDirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
         "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_CURVE_REPS", "3").toInt
     val outPath = sys.env.getOrElse("SPARK_GRAFT_CURVE_OUT",
       "SCALECURVE_r14.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match Bench: codegen cache sized past the suite (static conf)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.warehouse.dir", graft.Warehouse.dir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).selectExpr("sum(id)").collect()
+    val spark = Dev.session()
 
     val queries = SparkEntry.queries
     val missing = Targets.map(_._1).filterNot(queries.contains)
@@ -241,23 +235,14 @@ object ScaleCurve {
     def fmt(v: Double): String = f"$v%.3f"
     val results = allTargets.map { case (name, table, fn) =>
       val times = sfDirs.map { dir =>
-        // one unmeasured warm run per (query, sf) so codegen/file
-        // listing does not bias the SMALL sf points (where it is the
-        // same absolute cost but a far larger fraction)
-        try { fn(spark, dir).write.format("noop").mode("overwrite").save() }
-        catch { case _: Throwable => () }
-        spark.catalog.clearCache()
-        val ts = (1 to reps).flatMap { _ =>
-          val t0 = System.nanoTime()
-          try {
-            fn(spark, dir).write.format("noop").mode("overwrite").save()
-            Some((System.nanoTime() - t0) / 1e9)
-          } catch { case e: Throwable =>
+        // the cold pass keeps codegen and file listing out of the SMALL
+        // sf points, where the same absolute cost is a far larger fraction
+        Dev.warmPasses(spark, reps)(fn(spark, dir)) match {
+          case Success(ps) => Dev.median(ps.map(_.sec))
+          case Failure(e) =>
             System.err.println(s"[curve] $name @ $dir failed: ${e.getMessage}")
-            None
-          } finally spark.catalog.clearCache()
+            Double.NaN
         }
-        if (ts.isEmpty) Double.NaN else ts.sorted.apply(ts.size / 2)
       }
       val ns = sfDirs.map(dir => sizes((dir, table)))
       // collapse equal-size points (mean time), keep ascending by n

@@ -1,7 +1,7 @@
 package graft
 
-/** Per-JVM managed-table warehouse location. Bench, Verify, PlanAudit
-  * and DevBench all create bucketed tables with FIXED names
+/** Per-JVM managed-table warehouse location. Bench, Verify, ScaleCurve
+  * and Dev all create bucketed tables with FIXED names
   * (`graft_bkt_*`) — [[graft.ops.Bucketing.writeBucketed]] clears the
   * table's managed directory by name before writing, so two JVMs
   * sharing one warehouse path could delete each other's table

@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
-import java.io.{IOException, ObjectInputStream, ObjectOutputStream}
+import java.io.{FileNotFoundException, IOException, ObjectInputStream, ObjectOutputStream}
 import java.sql.Timestamp
 
 /** Hadoop `Configuration` is not `Serializable`; ship it to executors via
@@ -119,17 +119,19 @@ object FileCatalog {
     spark.createDataFrame(all, schema)
   }
 
-  /** Point lookup (F2 `exact_match` — no listing, `delete_file.py:134-139`). */
+  /** Point lookup (F2 `exact_match` — no listing, `delete_file.py:134-139`):
+    * one row when `relPath` names a file, none when it is missing or a
+    * directory (directories are excluded, as in [[list]]). */
   def stat(spark: SparkSession, rootUri: String, relPath: String): DataFrame = {
     val root = new Path(rootUri)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val target = new Path(root, relPath)
     val rows =
-      if (fs.exists(target)) {
-        val st = fs.getFileStatus(target)
-        Seq(Row(st.getPath.toString, relPath, st.getLen,
+      try {
+        val st = fs.getFileStatus(new Path(root, relPath))
+        if (st.isFile) Seq(Row(st.getPath.toString, relPath, st.getLen,
           new Timestamp(st.getModificationTime)))
-      } else Seq.empty[Row]
+        else Nil
+      } catch { case _: FileNotFoundException => Nil }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
   }
 

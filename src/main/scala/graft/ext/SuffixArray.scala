@@ -59,16 +59,6 @@ object SuffixArray {
     * levels. */
   val InitWidth: Int = 32
 
-  private val debug = sys.env.contains("SPARK_GRAFT_SA_DEBUG")
-  private def dbg(msg: => String): Unit =
-    if (debug) System.err.println(s"[sa] $msg")
-  private def timed[A](label: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    val r = f
-    dbg(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    r
-  }
-
   /** Materialized round state. Two traps force this exact shape:
     * (a) plain persist() leaves the LOGICAL plan nested — each round
     * embeds two copies of the previous round's tree, so analysis cost
@@ -159,8 +149,8 @@ object SuffixArray {
         .as("k"))
     val (k0, k0Count) = ZipIndex.withOrdinalCounted(
       keyed.select("k").distinct(), "r", Seq(col("k")))
-    var cur = timed("seed ranks")(materialize(keyed.join(k0, Seq("k"))
-      .select(col("id"), col("pos"), col("r"))))
+    var cur = materialize(keyed.join(k0, Seq("k"))
+      .select(col("id"), col("pos"), col("r")))
     val total = cur.count()
     val levels = Seq.newBuilder[Level]
     levels += Level(InitWidth.toLong, cur)
@@ -179,9 +169,8 @@ object SuffixArray {
       val (pk, pkCount) = ZipIndex.withOrdinalCounted(
         paired.select("pk").distinct(), "r", Seq(col("pk")))
       distinctRanks = pkCount
-      cur = timed(s"round w=$width")(materialize(
-        paired.join(pk, Seq("pk"))
-          .select(col("id"), col("pos"), col("r"))))
+      cur = materialize(paired.join(pk, Seq("pk"))
+        .select(col("id"), col("pos"), col("r")))
       width *= 2
       levels += Level(width, cur)
       rounds += 1
@@ -234,7 +223,7 @@ object SuffixArray {
           "__qa", "__qb")
       sinceMaterialize += 1
       if (sinceMaterialize == 3) { // bound the chained-join plan depth
-        p = timed(s"lcp materialize w=${lvl.width}")(materialize(p))
+        p = materialize(p)
         prev.foreach(_.unpersist())
         prev = Some(p)
         sinceMaterialize = 0

@@ -1,8 +1,6 @@
 package graft
 
 import graft.ops.{BlueprintError, ExactMatch, RegexMatch, Transfer}
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
@@ -58,6 +56,19 @@ class BlueprintsSpec extends SparkSpec {
     assert(Files.readString(dst.resolve("a.csv")) == "data:in/a.csv")
   }
 
+  test("exact match names a file, never a directory") {
+    val c = mkSrc()
+    val e = intercept[BlueprintError.NoMatchesFound] {
+      Blueprints.delete(spark, c.toUri.toString, "in", ExactMatch("deep"))
+    }
+    assert(e.exitCode == 200)
+    val dst = specTempDir("bp-dst")
+    val r = Blueprints.upload(spark, c.toUri.toString, "in",
+      ExactMatch("deep"), dst.toUri.toString)
+    assert(r.matched == 0 && ls(dst).isEmpty)
+    assert(ls(c).contains("in/deep/c.log"))
+  }
+
   test("move: single match not numbered; source removed") {
     val c = mkSrc()
     Blueprints.move(spark, c.toUri.toString, "in", RegexMatch("a\\.csv"),
@@ -99,22 +110,9 @@ class BlueprintsSpec extends SparkSpec {
     assert(r.manifest.columns.toSeq == Seq("src_path", "dest_path"))
   }
 
-  /** Call sites of the jobs `body` submits: the stage names, or the
-    * job description Spark fills in for a job with no partitions. */
-  private def jobsOf(body: => Unit): Seq[Seq[String]] = {
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(e.stageInfos.map(_.name) ++ Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))))
-    }
-    val sc = spark.sparkContext
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try { body; ListenerBusDrain(sc) }
-    finally sc.removeSparkListener(listener)
-    jobs.asScala.toSeq
-  }
+  /** Call sites of the jobs `body` submits (see [[JobProfile.Job]]). */
+  private def jobsOf(body: => Unit): Seq[String] =
+    JobProfile.record(spark.sparkContext)(body)._2.map(_.site)
 
   test("delete: the manifest acts on the snapshot it counted") {
     val c = mkSrc()
@@ -170,7 +168,7 @@ class BlueprintsSpec extends SparkSpec {
     }
     assert(r.matched == 0 && r.manifest.isEmpty)
     assert(r.manifest.columns.toSeq == Seq("src_path", "dest_path"))
-    assert(!jobs.flatten.exists(_.contains("Transfer.scala")), jobs)
+    assert(!jobs.exists(_.contains("Transfer.scala")), jobs)
     assert(jobs.size == 1, jobs)
   }
 
